@@ -1,8 +1,9 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.GraftPlanBridge.rebase
 import org.apache.spark.sql.functions._
-import graft.core.CacheScope
+import graft.core.{CacheScope, RoundState}
 import graft.functions.Fns
 
 /** Training-data-pipeline deduplication operators over a (doc_id, text)
@@ -196,12 +197,11 @@ object DedupOps {
     * label is carried through), so each round is exactly one materializing
     * count with no extra comparison join.
     *
-    * Scale hygiene (the round-2 verdict's leak): the superseded label
-    * frame is unpersisted as soon as the next round's materializes, and
-    * every ClusterRebaseEvery rounds the plan is rebased through the
-    * cached RDD, so Catalyst never re-optimizes an ever-deeper join chain.
-    * Only the final label frame survives, registered in `scope` for the
-    * caller to release after consuming the result.
+    * Scale hygiene: label rounds advance through a
+    * [[graft.core.RoundState]], which releases each superseded round and
+    * registers only the final one in `scope`; every ClusterRebaseEvery
+    * rounds (and every jump round) the plan is rebased onto the cached
+    * rows, so Catalyst never re-optimizes an ever-deeper join chain.
     */
   private[graft] def duplicateClustersCounted(pairs: DataFrame,
       scope: CacheScope): (DataFrame, Int) = {
@@ -384,7 +384,6 @@ object DedupOps {
 
   private[graft] def duplicateClustersLoop(pairs: DataFrame,
                                            scope: CacheScope): (DataFrame, Int) = {
-    val spark = pairs.sparkSession
     val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
     val symRaw = scope.persist(edges.unionByName(
       edges.select(col("dst").as("src"), col("src").as("dst"))))
@@ -396,10 +395,10 @@ object DedupOps {
     // driver CPU on q_dbscan's 2k-edge graph vs <1 s of actual compute).
     // The rebase wraps the persisted frame's RDD, so data still comes
     // from cache and the loop's plans start from a leaf.
-    val sym = spark.createDataFrame(symRaw.rdd, symRaw.schema)
-    var labels = sym.select(col("src").as("id")).distinct()
-      .withColumn("label", col("id"))
-    var prev: DataFrame = null
+    val sym = rebase(symRaw)
+    val state = RoundState.borrowed(sym.select(col("src").as("id")).distinct()
+      .withColumn("label", col("id")))
+    var labels = state.current
     var changed = 1L
     var rounds = 0
     while (changed > 0) {
@@ -423,12 +422,10 @@ object DedupOps {
               col("label") === col("lid"))
             .select(col("id"), col("old"), least(col("label"), col("llabel")).as("label"))
         }
-      val next = roundOut.persist()
-      changed = next.filter(col("label") =!= col("old")).count()
+      changed = state.advance(roundOut)(
+        _.filter(col("label") =!= col("old")).count())
       if (roundCache != null) roundCache.unpersist(blocking = false)
-      if (prev != null) prev.unpersist(blocking = false)
-      prev = next
-      val lbl = next.select(col("id"), col("label"))
+      val lbl = state.current.select(col("id"), col("label"))
       // plan-lineage rebase: every ClusterRebaseEvery-th plain round, and
       // EVERY jump round — the shortcut self-join DOUBLES the logical plan
       // per round, and without a per-round cut the analyzer/optimizer walk
@@ -439,11 +436,11 @@ object DedupOps {
       labels =
         if (changed > 0 &&
             (rounds >= ClusterJumpAfter || rounds % ClusterRebaseEvery == 0))
-          spark.createDataFrame(lbl.toDF().rdd, lbl.schema)
+          rebase(lbl)
         else lbl
     }
-    scope.track(prev)
-    (prev.select(col("id").as("doc_id"), col("label").as("cluster_id")), rounds)
+    (state.survivor(scope)
+      .select(col("id").as("doc_id"), col("label").as("cluster_id")), rounds)
   }
 
   /** Durable, resumable duplicate clustering — the same min-label

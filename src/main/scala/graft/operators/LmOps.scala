@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.CacheScope
+import graft.core.{CacheScope, RoundState}
 import graft.functions.Fns
 import graft.plans.{HllExpressions, TextHashExpressions}
 
@@ -455,14 +455,13 @@ object LmOps {
       scope: CacheScope = CacheScope.global): (DataFrame, DataFrame) = {
     val spark = words0.sparkSession
     import spark.implicits._
-    var cached = words0.persist()
-    var state = spark.createDataFrame(cached.rdd, cached.schema)
+    val state = RoundState(words0)
     val merges = scala.collection.mutable.ListBuffer.empty[(Long, String, String, Long)]
     var r = 0L
     var done = false
     while (r < rounds && !done) {
       r += 1
-      val top = state
+      val top = state.current
         .select(col("wc"), split(trim(col("s")), " ").as("a"))
         .filter(size(col("a")) >= 2)
         .select(col("wc"), explode(expr(
@@ -484,16 +483,10 @@ object LmOps {
               element_at(acc, -1) === lit(x) && sym === lit(y),
               concat(slice(acc, lit(1), size(acc) - 1), array(lit(x + y))))
             .otherwise(concat(acc, array(sym))))
-        val next = state.select(col("w"), col("wc"),
-          concat(lit(" "), array_join(folded, " "), lit(" ")).as("s"))
-          .persist()
-        next.count() // materialize before dropping the previous round
-        cached.unpersist(blocking = false)
-        cached = next
-        state = spark.createDataFrame(next.rdd, next.schema)
+        state.step(state.current.select(col("w"), col("wc"),
+          concat(lit(" "), array_join(folded, " "), lit(" ")).as("s")))
       }
     }
-    scope.track(cached)
-    (merges.toSeq.toDF("round", "sym_a", "sym_b", "cnt"), state)
+    (merges.toSeq.toDF("round", "sym_a", "sym_b", "cnt"), state.survivor(scope))
   }
 }

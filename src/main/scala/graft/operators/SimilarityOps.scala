@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.GraftPlanBridge.rebase
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.core.CacheScope
@@ -244,7 +245,6 @@ object SimilarityOps {
   def pqTopK(emb: DataFrame, queries: DataFrame, k: Int,
              ksub: Int = PqKsub, m: Int = 8): DataFrame = {
     import graft.plans.GeomExpressions.{pqAdcScore, pqDistTable, pqEncode}
-    val spark = emb.sparkSession
     val bc = pqCodebook(emb, ksub, m)
 
     // the RDD rebase is a deliberate codegen BARRIER, not lineage hygiene:
@@ -255,7 +255,7 @@ object SimilarityOps {
     // cost PQ exists to avoid). The rebase materializes codes once per
     // corpus row — no shuffle, stays fully distributed.
     val codes0 = emb.select(col("vec_id"), pqEncode(col("embedding"), bc).as("codes"))
-    val codes = spark.createDataFrame(codes0.rdd, codes0.schema)
+    val codes = rebase(codes0)
     val q = broadcast(queries.select(col("vec_id").as("qid"),
       pqDistTable(col("embedding"), bc).as("dtab")))
     val scored = codes.join(q, col("vec_id") =!= col("qid"))
@@ -323,7 +323,6 @@ object SimilarityOps {
                 maxCentroids: Int = IvfMaxCentroids, nprobe: Int = 4,
                 ksub: Int = PqKsub, m: Int = 8): DataFrame = {
     import graft.plans.GeomExpressions.{pqAdcScore, pqDistTableRes, pqEncodeRes, vecNearestCentroids}
-    val spark = emb.sparkSession
     // one count() sizes both builders (the documented eager probe, paid once)
     val n = emb.count()
     val bcCents = coarseQuantizer(emb, maxCentroids, n)
@@ -331,15 +330,15 @@ object SimilarityOps {
 
     val assigned0 = emb.select(col("vec_id"), col("embedding"),
       element_at(vecNearestCentroids(col("embedding"), 1, bcCents), 1).as("cid"))
-    val assigned = spark.createDataFrame(assigned0.rdd, assigned0.schema)
+    val assigned = rebase(assigned0)
     val codes0 = assigned.select(col("vec_id"), col("cid"),
       pqEncodeRes(col("embedding"), col("cid"), bcCents, bcBook).as("codes"))
-    val codes = spark.createDataFrame(codes0.rdd, codes0.schema)
+    val codes = rebase(codes0)
     // the probe list is computed BEFORE the explode (once per query); the
     // residual dtab is per (query, probe) BY DESIGN — see scaladoc
     val probes0 = queries.select(col("vec_id").as("qid"), col("embedding").as("qemb"),
       vecNearestCentroids(col("embedding"), nprobe, bcCents).as("cids"))
-    val probes = spark.createDataFrame(probes0.rdd, probes0.schema)
+    val probes = rebase(probes0)
       .select(col("qid"), col("qemb"), explode(col("cids")).as("cid"))
       .select(col("qid"), col("cid"),
         pqDistTableRes(col("qemb"), col("cid"), bcCents, bcBook).as("dtab"))

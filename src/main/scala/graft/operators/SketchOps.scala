@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.core.Hll
+import graft.core.{Hll, RoundState}
 
 /** Distributed sketches with DETERMINISTIC parity: every register value is
   * a pure integer function of the (already oracle-twinned) row hash, so
@@ -164,30 +164,22 @@ object SketchOps {
       rounds: Int, m: Int = Hll.M,
       scope: graft.core.CacheScope =
         graft.core.CacheScope.global): DataFrame = {
-    val spark = e.sparkSession
     def finishRound(state: DataFrame, r: Int): DataFrame =
       finish(state, "node_id", Nil, m)
         .select(col("node_id"), lit(r.toLong).as("r"),
           col("n_regs"), col("reg_sum"), col("est_e3"))
-    var cached = registers(nodes, "node_id", col("fp"), m)
-      .groupBy(col("node_id"), col("reg")).agg(max(col("rho")).as("mrho"))
-      .persist()
-    var state = spark.createDataFrame(cached.rdd, cached.schema)
-    val outs = scala.collection.mutable.ListBuffer(finishRound(state, 0))
+    val state = RoundState(registers(nodes, "node_id", col("fp"), m)
+      .groupBy(col("node_id"), col("reg")).agg(max(col("rho")).as("mrho")))
+    val outs = scala.collection.mutable.ListBuffer(finishRound(state.current, 0))
     for (r <- 1 to rounds) {
       val prop = e
-        .join(state.withColumnRenamed("node_id", "dst"), "dst")
+        .join(state.current.withColumnRenamed("node_id", "dst"), "dst")
         .select(col("src").as("node_id"), col("reg"), col("mrho"))
-      val next = state.unionByName(prop)
-        .groupBy(col("node_id"), col("reg")).agg(max(col("mrho")).as("mrho"))
-        .persist()
-      next.count() // materialize before dropping the previous round
-      cached.unpersist(blocking = false)
-      cached = next
-      state = spark.createDataFrame(next.rdd, next.schema)
-      outs += finishRound(state, r)
+      state.step(state.current.unionByName(prop)
+        .groupBy(col("node_id"), col("reg")).agg(max(col("mrho")).as("mrho")))
+      outs += finishRound(state.current, r)
     }
-    scope.track(cached)
+    state.survivor(scope)
     outs.reduce(_ unionByName _)
   }
 

@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.GraftPlanBridge.rebase
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.core.{CacheScope, CellId, Planar}
@@ -875,7 +876,7 @@ object SpatialOps {
     // core-core edges, borders AND the cluster loop — without cutting the
     // cover-tree lineage here every downstream action re-analyzes it
     // (driver CPU, not compute; see duplicateClustersCounted)
-    val pairs = pts.sparkSession.createDataFrame(pairsRaw.rdd, pairsRaw.schema)
+    val pairs = rebase(pairsRaw)
     val cores = scope.persist(pairs.groupBy("qid")
       .agg(count(lit(1)).as("n_nbrs"))
       .filter(col("n_nbrs") >= minPts - 1).select(col("qid").as("pid")))
@@ -3068,7 +3069,7 @@ object SpatialOps {
       compactCells(
         rasterizePolygons(polys, level).select(col("poly_id"),
           col("cell_x").as("bx"), col("cell_y").as("by")),
-        level, keys = Seq("poly_id"), scope))
+        level, keys = Seq("poly_id"), scope), scope)
 
   /** Production overload: probe a PRECOMPUTED per-polygon compacted
     * cover (the [[compactCells]] output shape `(lv, poly_id, bx, by)` —
@@ -3078,11 +3079,11 @@ object SpatialOps {
     * shuffle-hash join on the ancestor keys plus the broadcast ray-cast
     * refine — no rasterize, no compaction rounds (plan-asserted in
     * CompactCoverSpec). The convenience overload above keeps the
-    * build-in-query path for one-shot use.
+    * build-in-query path for one-shot use. The persisted cover is
+    * registered in `scope`.
     */
   def pipJoinCompact(points: DataFrame, polys: DataFrame, level: Int,
-                     cover: DataFrame): DataFrame = {
-    val scope = CacheScope.global
+                     cover: DataFrame, scope: CacheScope): DataFrame = {
     // ONE tiny probe over the (artifact-sized) cover picks the join
     // dispatch and trims the ancestor ladder to the level range actually
     // present: compacted covers never reach the coarse root levels, so

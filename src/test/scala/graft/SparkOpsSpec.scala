@@ -1004,8 +1004,18 @@ class SparkOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     graft.core.CacheScope.releaseGlobal()
     spark.sharedState.cacheManager.clearCache()
     assert(spark.sparkContext.getPersistentRDDs.isEmpty)
+    val ss = spark; import ss.implicits._
     val pts = Synth.points(spark, dir)
     val corpus = Synth.corpus(spark, dir)
+    // one input per round-loop shape, called on the distributed loop
+    // directly (the size dispatch would pick the single-task twin here)
+    val rnd = new scala.util.Random(53)
+    val edges = Seq.fill(240)((rnd.nextInt(60).toLong, rnd.nextInt(60).toLong))
+      .toDF("src", "dst").filter(col("src") =!= col("dst")).distinct()
+    val und = edges.select(least(col("src"), col("dst")).as("a"),
+      greatest(col("src"), col("dst")).as("b")).distinct()
+    val words0 = Seq(("banana", 3L, " b a n a n a "), ("bandana", 2L,
+      " b a n d a n a "), ("an", 5L, " a n ")).toDF("w", "wc", "s")
     val runs: Seq[(String, graft.core.CacheScope => org.apache.spark.sql.DataFrame)] = Seq(
       ("knn", sc => SpatialOps.knn(pts, pts.filter(col("pid") % 997 === 0), 5, scope = sc)),
       ("knnShuffled", sc =>
@@ -1013,7 +1023,19 @@ class SparkOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       ("minHashLshPairs", sc => DedupOps.minHashLshPairs(corpus, sc)),
       ("ngramJaccardPairs", sc => DedupOps.ngramJaccardPairs(corpus, 600, sc)),
       ("duplicateClusters", sc =>
-        DedupOps.duplicateClusters(DedupOps.minHashLshPairs(corpus, sc), sc)))
+        DedupOps.duplicateClusters(DedupOps.minHashLshPairs(corpus, sc), sc)),
+      ("pageRankLoop", sc => GraphOps.pageRankLoop(edges, 4, sc)),
+      ("kTrussLoop", sc => GraphOps.kTrussLoop(und, 3, 5, sc)),
+      // starts from an input frame the loop does not own
+      ("topologicalLayersLoop", sc =>
+        GraphOps.topologicalLayersLoop(sc.persist(edges), 4, sc)),
+      ("lubyRoundsLoop", sc =>
+        GraphOps.lubyRoundsLoop(und, 6, 1000003L, removeNeighbors = true, sc)),
+      ("duplicateClustersLoop", sc => DedupOps.duplicateClustersLoop(
+        und.select(col("a").as("doc_a"), col("b").as("doc_b")), sc)._1),
+      ("bpeTrainLoop", sc => LmOps.bpeTrainLoop(words0, 3, sc)._2),
+      ("pipJoinCompact", sc => SpatialOps.pipJoinCompact(pts,
+        Synth.hexCorpus(spark, 3000), 10, scope = sc)))
     runs.foreach { case (name, run) =>
       val scope = new graft.core.CacheScope
       assert(run(scope).count() > 0, name)

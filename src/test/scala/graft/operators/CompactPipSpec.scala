@@ -81,7 +81,7 @@ class CompactPipSpec extends AnyFunSuite with BeforeAndAfterAll {
         L, keys = Seq("poly_id"))
       .write.mode("overwrite").parquet(dir)
     val probe = SpatialOps.pipJoinCompact(pts, polysDf, L,
-      s.read.parquet(dir))
+      s.read.parquet(dir), graft.core.CacheScope.global)
     // plan assertion: with the cover supplied, the probe is ONE ancestor
     // explode + TWO joins (cover equi-join, broadcast ray-cast refine) —
     // no rasterize (two sequence-explodes per polygon) and no compaction
